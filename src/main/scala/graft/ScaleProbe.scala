@@ -28,15 +28,7 @@ object ScaleProbe {
     // sub-second side, and the un-timed rows/vols passes only need to
     // run once (they are deterministic counts, not measurements)
     val timesOnly = args.lift(4).contains("times")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // the replica build DELETES and rewrites tables under `out` — it
     // must never point at the driver-owned read-only testdata (or at
@@ -59,21 +51,23 @@ object ScaleProbe {
     }
 
     // same warmup + measurement discipline as Bench
-    spark.range(2000000).selectExpr("sum(id % 7)").collect()
-    spark.read.parquet(s"$out/lineitem.parquet").limit(1000).count()
+    Harness.warmUp(spark, out)
     val names = queryCsv.split(",").toSeq
-    def pass(): Seq[(String, Double)] = names.map { name =>
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, out).write.mode("overwrite").format("noop").save()
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    def gcSettle(): Unit = { System.gc(); Thread.sleep(2000); System.gc() }
-    gcSettle()
+    val errors = new Harness.Errors()
+    def pass(): Seq[(String, Double)] =
+      names.map(n => Harness.timedOne(spark, out, errors)(n, SparkEntry.queries(n)))
+    Harness.gcSettle()
     val p1 = pass()
     graft.util.Caches.clearAll(spark)
-    gcSettle()
+    Harness.gcSettle()
     val p2 = pass()
     graft.util.Caches.clearAll(spark)
+    // a query that threw must not report a phantom-fast wall
+    if (!errors.isEmpty) {
+      errors.forEach((n, e) => System.err.println(s"[scaleprobe] $n failed: $e"))
+      spark.stop()
+      sys.exit(1)
+    }
     // OUTPUT-SIZE pass (round-10, verdict ask #1): for every probed
     // query, record the emitted row count beside the seconds so
     // output-bound growth is separable from plan growth — a near-dup

@@ -27,7 +27,8 @@ object SparkEntry {
     * candidate pairs / decoded rows the probe divides runtime by when
     * the emitted row count is constant by construction (LIMIT k,
     * O(1)-row aggs, verify-filtered pair joins). Consumed by
-    * [[ScaleProbe]]; not part of the driver contract. */
+    * [[ScaleProbe]]'s un-timed volume pass; not part of the driver
+    * contract. */
   def volumes: Map[String, (SparkSession, String) => Long] =
     graft.queries.Relational.volumes ++
       graft.queries.PipelineOps.volumes ++

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import graft.io.Tables
+import graft.util.Slug
 
 /** Per-user session state carried across streaming micro-batches. */
 case class UserSessState(lastUs: Long, nSessions: Long, nEvents: Long)
@@ -131,9 +132,13 @@ object EventQueries {
   private val overlapCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), String]
 
+  /** Forget the overlap memo (and the sessions it keys on); the disk
+    * artifact stays, and the next q81/q109 call rebuilds it. */
+  private[graft] def clearMemo(): Unit = overlapCache.clear()
+
   private def sessionOverlapPairs(s: SparkSession, d: String): DataFrame = {
     val tbl = overlapCache.getOrElseUpdate((s, d), {
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_")
+      val slug = Slug(d)
       val name = s"sessoverlap_$slug"
       val ev = Tables.events(s, d).select(col("user_id"), col("event_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"))
@@ -441,7 +446,7 @@ object EventQueries {
       // instead of leaking a fresh createTempDirectory per pass (the
       // returned DataFrame reads `state`, so the dir must outlive the
       // query; next invocation is the natural cleanup point).
-      val tmp = s"/tmp/graft_cdc_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+      val tmp = s"/tmp/graft_cdc_${Slug(d)}"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
       val srcDir = s"$tmp/src"
       val state = s"$tmp/state"
@@ -735,7 +740,7 @@ object EventQueries {
         .agg(max(col("doc_id") % 1440)).head().getLong(0)
       // fixed per-dataset workspace, wiped per invocation (q122's
       // reuse-don't-leak discipline)
-      val tmp = s"/tmp/graft_crawlinc_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+      val tmp = s"/tmp/graft_crawlinc_${Slug(d)}"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
       val docs = Tables.documents(s, d)
         .select(col("doc_id").cast("long").as("doc_id"), col("source"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
-import graft.util.Exact
+import graft.util.{Exact, Slug}
 
 /** Relational operator coverage (SURVEY §2: scans S1/S2, filter F1,
   * joins J1-J4, aggregations A1/A3-A5/A12, top-k T1/T2, set ops §2.6)
@@ -46,7 +46,7 @@ object Relational {
     mvCache.getOrElseUpdate((s, d), {
       // Full-path slug, not hashCode: two dataset dirs can collide on
       // abs(hashCode) and would then share (and clobber) one MV.
-      val path = s"/tmp/graft_mv_${d.replaceAll("[^A-Za-z0-9]", "_")}/lineitem_rollup"
+      val path = s"/tmp/graft_mv_${Slug(d)}/lineitem_rollup"
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("cnt"))
@@ -67,7 +67,7 @@ object Relational {
 
   private def bucketedFacts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val (ln, on) = bucketedCache.getOrElseUpdate((s, d), {
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_")
+      val slug = Slug(d)
       val lname = s"bkt_lineitem_$slug"
       val oname = s"bkt_orders_$slug"
       graft.io.Bucketing.writeBucketed(
@@ -94,7 +94,7 @@ object Relational {
       // a second session/process on the same dataset can never clobber
       // files a concurrent scan's planned partitions point at, and
       // distinct dataset paths can't collide through slug sanitization.
-      val dir = s"/tmp/graft_grec_${d.replaceAll("[^A-Za-z0-9]", "_")}_" +
+      val dir = s"/tmp/graft_grec_${Slug(d)}_" +
         java.util.UUID.randomUUID().toString.take(8)
       // DSv2 committed write path: staged files + job-commit rename
       Tables.lineitem(s, d).select(col("l_orderkey").cast("long"),
@@ -109,7 +109,7 @@ object Relational {
     * no Exchange before groupBy(u)/join-on-u consumers). */
   private def coPurchaseAdj(s: SparkSession, d: String): DataFrame = {
     val tbl = coPurchaseCache.getOrElseUpdate((s, d), {
-      val slug = d.replaceAll("[^A-Za-z0-9]", "_")
+      val slug = Slug(d)
       val name = s"copurchase_$slug"
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey"))

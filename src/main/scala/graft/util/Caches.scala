@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** End-of-run cache hygiene. Query builders cache intermediates that
   * are reused within and across queries (shingle sets, TF-IDF counts,
   * doc vectors) — correct for a batch run, a leak in a long-lived
-  * session. The harness mains (Verify, Bench) call [[clearAll]] after
-  * their query loop; tests assert nothing stays persisted. */
+  * session. [[graft.Harness]] and its callers call [[clearAll]] after
+  * each query loop; tests assert nothing stays persisted. */
 object Caches {
 
   /** Unpersist every cached DataFrame/RDD and drop the query-module
@@ -16,6 +16,7 @@ object Caches {
     graft.queries.Clustering.clearMemo()
     graft.queries.PipelineOps.clearMemo()
     graft.queries.Relational.clearMemo()
+    graft.queries.EventQueries.clearMemo()
     // per-call caches (Dedup shingles/signatures, K-Means inputs) are
     // catalog-level cached plans:
     spark.catalog.clearCache()

@@ -25,4 +25,20 @@ class CachesSpec extends AnyFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       s"leaked: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
   }
+
+  test("clearAll drops the q81/q109 overlap memo: q81 rebuilds its artifact") {
+    val q81 = SparkEntry.queries("q81_session_overlap")
+    val dir = new java.io.File(s"/tmp/graft_sessoverlap_${graft.util.Slug(TestSession.sf)}")
+    def parts(): Set[String] =
+      Option(dir.list()).toSet.flatten.filter(_.startsWith("part-"))
+    val first = q81(spark, TestSession.sf).collect().toSet
+    val built = parts()
+    assert(built.nonEmpty, s"no artifact at $dir")
+    Caches.clearAll(spark)
+    assert(q81(spark, TestSession.sf).collect().toSet == first)
+    // an overwrite writes new part files; a memo hit reads the old ones
+    val rebuilt = parts()
+    assert(rebuilt.nonEmpty && (built & rebuilt).isEmpty,
+      "q81 read the old artifact after clearAll instead of rebuilding it")
+  }
 }

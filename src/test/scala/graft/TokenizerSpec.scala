@@ -5,18 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM per `sbt test` fork). */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(cores = 4)
   val sf = "/root/testdata/sf0.001"
 }
 
