@@ -92,7 +92,8 @@ object Harness {
     // a round-11 A/B; dropping the views recovered 10.8→4.2 s with
     // heap 2564→67 MB). Dropping AFTER the timed window keeps the
     // measurement itself unchanged. Only `stream_*` views are
-    // dropped — the co-purchase memo table is a cross-query cache.
+    // dropped: every streaming query names its memory sink that way,
+    // and other temp views belong to the caller.
     try s.catalog.listTables().collect()
       .filter(t => t.isTemporary && t.name.startsWith("stream_"))
       .foreach(t => s.catalog.dropTempView(t.name))

@@ -32,6 +32,7 @@ object Run {
             case e: Throwable => println(s"  failed: ${e.getMessage}"); false
           }
         }
+        graft.util.Caches.clearAll(spark)
         spark.stop()
         if (failed.nonEmpty) sys.exit(1)
       case other => sys.error(s"unknown mode $other (bench|show|explain)")

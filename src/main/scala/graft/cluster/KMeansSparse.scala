@@ -214,7 +214,7 @@ object KMeansSparse {
       cents = meanExactFrames(exploded, a, cur)
     }
     val out = cents.localCheckpoint(true)
-    if (nrm != null && (nrm0 eq null)) graft.ops.Graph.unpersistSnapshot(nrm)
+    if (nrm != null && (nrm0 eq null)) graft.util.Snapshots.unpersist(nrm)
     out
   }
 

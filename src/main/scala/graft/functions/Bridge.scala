@@ -34,7 +34,7 @@ object Bridge {
     * so the planner sees the same node localCheckpoint would produce.
     * Blocks are registered persistent RDDs — reclaimed by
     * [[graft.util.Caches.clearAll]] and by
-    * [[graft.ops.Graph.unpersistSnapshot]]. */
+    * [[graft.util.Snapshots.unpersist]]. */
   def persistedRowSnapshot(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
     val rdd = ds.queryExecution.toRdd.map(_.copy())
@@ -65,6 +65,16 @@ object Bridge {
     exp.synchronized {
       if (!exp.extraOptimizations.contains(r))
         exp.extraOptimizations = exp.extraOptimizations :+ r
+    }
+  }
+
+  /** Remove an optimizer rule [[addOptimization]] registered (a no-op
+    * when the session does not hold it). */
+  def removeOptimization(spark: SparkSession,
+                         r: org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]): Unit = {
+    val exp = spark.asInstanceOf[classic.SparkSession].experimental
+    exp.synchronized {
+      exp.extraOptimizations = exp.extraOptimizations.filterNot(_ == r)
     }
   }
 }

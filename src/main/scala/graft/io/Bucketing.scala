@@ -38,4 +38,14 @@ object Bucketing {
 
   /** Read a bucketed table back (scan carries the bucket spec). */
   def read(spark: SparkSession, name: String): DataFrame = spark.table(name)
+
+  /** `df` written ONCE per (name, session, dataset dir) as a
+    * [[graft.util.Caches.artifact]] — a bucketed table in the entry's
+    * own dir — and read back on every call until Caches.clearAll. */
+  def memo(name: String, spark: SparkSession, dir: String, key: String,
+           buckets: Int, extraSort: Seq[String] = Nil)(df: => DataFrame): DataFrame =
+    read(spark, graft.util.Caches.artifact(name, spark, dir) { a =>
+      writeBucketed(df, a.table, a.dir, key, buckets, extraSort)
+      a.table
+    })
 }

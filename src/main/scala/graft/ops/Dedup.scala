@@ -298,8 +298,8 @@ object Dedup {
           (coalesce(col("mlabel"), col("lab1")) =!= col("old")).as("chg"))
         .localCheckpoint(true)
       // previous round's snapshot is dead once `next` materializes —
-      // free it (graft.ops.Graph.unpersistSnapshot; round-11)
-      graft.ops.Graph.unpersistSnapshot(prevSnap)
+      // free it (graft.util.Snapshots.unpersist; round-11)
+      graft.util.Snapshots.unpersist(prevSnap)
       prevSnap = next
       changed = next.filter(col("chg")).count()
       labels = next.select(col("id"), col("label"))

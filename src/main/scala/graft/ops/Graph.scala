@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import graft.util.Snapshots.unpersist
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics over an edge DataFrame.
@@ -38,32 +39,6 @@ import org.apache.spark.sql.functions._
   *    mass is conserved up to integer-division remainders.
   */
 object Graph {
-
-  /** Free a round snapshot's storage (round-11, ADVICE r10): the
-    * iterative kernels below snapshot each round with
-    * `localCheckpoint(true)`, and those disk/memory-backed blocks were
-    * RETAINED until ContextCleaner happened to GC them — up to `iters`
-    * dead rounds per call. `Dataset.unpersist` alone does NOT free a
-    * checkpoint (it only touches the SQL cache), so this digs the
-    * materialized RDD out of the snapshot's `LogicalRDD` and drops its
-    * blocks directly.
-    *
-    * Contract: call ONLY on a snapshot that will never be read again —
-    * lineage is truncated, so a freed snapshot is unrecoverable (the
-    * same trade localCheckpoint itself makes vs executor loss: these
-    * kernels prefer a loud retry-the-job failure over silently
-    * recomputing a whole BSP history; a multi-node deployment would
-    * use reliable `checkpoint()` to the cluster FS). Safe timing: each
-    * round's snapshot is EAGER, so once round t is materialized the
-    * round t−1 snapshot is dead. */
-  private[graft] def unpersistSnapshot(df: DataFrame): Unit = {
-    df.unpersist(blocking = false) // covers plain .cache() inputs
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-  }
 
   /** Broadcast-vs-shuffle gate for the per-round node-state joins of
     * the iterative kernels (round-11, guide §3.1): a per-node table
@@ -135,9 +110,9 @@ object Graph {
       // recomputes the whole history; the eager disk-backed snapshot
       // can spill under storage pressure but never recompute. Once
       // this round materializes, the PREVIOUS round's snapshot is
-      // dead — free it ([[unpersistSnapshot]]).
+      // dead — free it ([[graft.util.Snapshots.unpersist]]).
       val cur = ranks.localCheckpoint(true)
-      if (prevSnap != null) unpersistSnapshot(prevSnap)
+      if (prevSnap != null) unpersist(prevSnap)
       prevSnap = cur
       val dangShare = cur.where(col("outdeg") === 0)
         .agg(coalesce(sum(col("rank")), lit(0L))).first().getLong(0) / n
@@ -207,7 +182,7 @@ object Graph {
       // eager localCheckpoint round snapshot + previous-round release
       // — see pageRankExact
       val cur = ranks.localCheckpoint(true)
-      if (prevSnap != null) unpersistSnapshot(prevSnap)
+      if (prevSnap != null) unpersist(prevSnap)
       prevSnap = cur
       val dangShare = cur.where(col("outdeg") === 0)
         .agg(coalesce(sum(col("rank")), lit(0L))).first().getLong(0) / s
@@ -279,8 +254,8 @@ object Graph {
         .select(col("node"),
           expr(s"coalesce(a, 0L) * ${scale}L div ${math.max(aSum, 1L)}L").as("a"))
         .localCheckpoint(true)
-      unpersistSnapshot(aRaw)
-      if (auths != null) unpersistSnapshot(auths)
+      unpersist(aRaw)
+      if (auths != null) unpersist(auths)
       val hRaw = e.join(bc(aN), e("dst") === aN("node"))
         .groupBy(e("src").as("hnode")).agg(sum(col("a")).as("hs"))
         .localCheckpoint(true)
@@ -289,8 +264,8 @@ object Graph {
         .select(col("node"),
           expr(s"coalesce(hs, 0L) * ${scale}L div ${math.max(hSum, 1L)}L").as("h"))
         .localCheckpoint(true)
-      unpersistSnapshot(hRaw)
-      unpersistSnapshot(hubs)
+      unpersist(hRaw)
+      unpersist(hubs)
       auths = aN
       hubs = hN
     }
@@ -567,7 +542,7 @@ object Graph {
       // eager localCheckpoint round snapshot + previous-round release
       // — see pageRankExact
       val cur = labels.localCheckpoint(true)
-      if (prevSnap != null) unpersistSnapshot(prevSnap)
+      if (prevSnap != null) unpersist(prevSnap)
       prevSnap = cur
       val best = e
         .join(bc(cur.select(col("node").as("dst"), col("lbl"))), "dst")
@@ -640,7 +615,7 @@ object Graph {
       // eager localCheckpoint round snapshot + previous-round release
       // — see pageRankExact
       val cur = dist.localCheckpoint(true)
-      if (prevSnap != null) unpersistSnapshot(prevSnap)
+      if (prevSnap != null) unpersist(prevSnap)
       prevSnap = cur
       val relaxed = e.join(bc(cur.withColumnRenamed("node", "src")), "src")
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
@@ -677,7 +652,7 @@ object Graph {
       // of the previous round's, so the release waits for the pair)
       val s = seen.localCheckpoint(true)
       val f = frontier.localCheckpoint(true)
-      if (prevS != null) { unpersistSnapshot(prevS); unpersistSnapshot(prevF) }
+      if (prevS != null) { unpersist(prevS); unpersist(prevF) }
       prevS = s; prevF = f
       val fresh = e.join(bc(f.select(col("node").as("src"))), "src")
         .select(col("dst").as("node")).distinct()
@@ -748,16 +723,16 @@ object Graph {
         .join(bc(keep.select(col("u").as("v"))), Seq("v"), "left_semi")
         .select(col("u"), col("v")).localCheckpoint(true)
       val nextSize = next.count()
-      unpersistSnapshot(keep) // dead once `next` is materialized
+      unpersist(keep) // dead once `next` is materialized
       if (nextSize == size) {
         // fixpoint: every remaining round is a no-op — skip them (the
         // result is IDENTICAL to running all `rounds`, just cheaper);
         // the identical-content `next` snapshot is dead — free it
-        unpersistSnapshot(next)
+        unpersist(next)
         converged = true
       } else {
         // previous round's peel snapshot is dead once `next` counted
-        unpersistSnapshot(adj)
+        unpersist(adj)
         adj = next
         size = nextSize
       }
@@ -987,15 +962,15 @@ object Graph {
         .union(sMin.select(col("c").as("u"), col("m").as("v")))
         .distinct().localCheckpoint(true)
       val nextFp = fingerprint(small) // O(1) rows back off the checkpoint
-      unpersistSnapshot(oriented) // dead once `small` is materialized
-      // unpersistSnapshot, not Dataset.unpersist (round-11): the
+      unpersist(oriented) // dead once `small` is materialized
+      // Snapshots.unpersist, not Dataset.unpersist (round-11): the
       // latter only touches the SQL cache, so every round's checkpoint
       // blocks were silently retained despite the unpersist call here
       if (nextFp == fp) {
-        unpersistSnapshot(small)
+        unpersist(small)
         converged = true
       } else {
-        unpersistSnapshot(e)
+        unpersist(e)
         e = small
         fp = nextFp
       }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
+import graft.util.{Caches, Snapshots}
 import graft.text.{Tokenizer, TfIdf}
 import graft.cluster.{KMeans2D, KMeansSparse, KMeansParallel}
 
@@ -39,14 +40,13 @@ object Clustering {
   private val FitMaxIter = 10
 
   // Doc vectors feed three K-Means queries — materialized once per
-  // (session, dir), like the reference's persisted TFIDF.txt input that
-  // every KMeans task re-reads.
-  private val dvCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  // (session, dir) and held until graft.util.Caches.clearAll, like the
+  // reference's persisted TFIDF.txt input that every KMeans task
+  // re-reads.
 
   /** TF-IDF doc vectors (term → weight map) for the documents corpus. */
   def docVectors(s: SparkSession, d: String): DataFrame =
-    dvCache.getOrElseUpdate((s, d), {
+    Caches.memo("doc_vectors", s, d) {
       val fc = TextQueries.filteredCounts(s, d)
       // coalesce: the vector table is small (one row per doc) and feeds
       // ~10 short actions per K-Means run — right-sizing partitions
@@ -58,20 +58,7 @@ object Clustering {
         TfIdf.tfidf(TfIdf.tf(fc, "doc_id"), TfIdf.idf(fc, "doc_id")), "doc_id")
         .coalesce(math.max(2, s.sparkContext.defaultParallelism / 4))
         .cache()
-    })
-
-  /** Drop the memoized doc-vector table and the shared sparse fit,
-    * unpersisting their storage (see graft.util.Caches). */
-  private[graft] def clearMemo(): Unit = {
-    dvCache.values.foreach(_.unpersist(blocking = false))
-    dvCache.clear()
-    sparseFitCache.values.foreach { case (ex, nrm, c) =>
-      graft.ops.Graph.unpersistSnapshot(ex)
-      graft.ops.Graph.unpersistSnapshot(nrm)
-      graft.ops.Graph.unpersistSnapshot(c)
-    }
-    sparseFitCache.clear()
-  }
+    }(Snapshots.unpersist)
 
   val queries: Map[String, Q] = Map(
     // M1+J5+A6 pinned by oracle: one Euclidean assignment step against
@@ -236,17 +223,18 @@ object Clustering {
   /** Shared exact sparse fit for q22/q23: exploded doc vectors + the
     * centroid frame after [[SparseIters]] exact Lloyd iterations from
     * the [[SparseK]] min-id seeds. Memoized per (session, dir)
-    * (round-12, the dvCache pattern): q22 and q23 each ran the FULL
+    * (round-12, the docVectors pattern): q22 and q23 each ran the FULL
     * two-iteration fit — identical deterministic inputs, identical
     * centroids — so the second caller now reuses the first's staged
     * (ex, nrm, centroids) instead of re-running ~2.5 s of Lloyd
-    * rounds. Reclaimed by [[clearMemo]] with the other memos. */
-  private val sparseFitCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-
+    * rounds. Like every memo, the staged O(nnz) matrix is held until
+    * graft.util.Caches.clearAll (so other queries in the same pass
+    * share the block manager with it). */
   private def exactSparseFit(s: SparkSession,
                              d: String): (DataFrame, DataFrame, DataFrame) =
-    sparseFitCache.getOrElseUpdate((s, d), exactSparseFitBuild(s, d))
+    Caches.memo("sparse_fit", s, d)(exactSparseFitBuild(s, d)) {
+      case (ex, nrm, c) => Seq(ex, nrm, c).foreach(Snapshots.unpersist)
+    }
 
   private def exactSparseFitBuild(s: SparkSession,
                              d: String): (DataFrame, DataFrame, DataFrame) = {

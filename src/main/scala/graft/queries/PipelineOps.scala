@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Tables
+import graft.util.{Caches, Snapshots}
 import graft.ops.{CorpusStats, Crawl, Dedup, Similarity, TextAnalysis, Multimodal}
 import graft.functions.SimHash
 
@@ -18,35 +19,23 @@ object PipelineOps {
   type Q = (SparkSession, String) => DataFrame
 
   // The verified near-dup pair list feeds q26 (the pairs themselves)
-  // and q52 (components over them) — materialize once per
-  // (session, dir), like the TF-IDF intermediates in TextQueries.
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
+  // and q52 (components over them) — materialized once per
+  // (session, dir) and held until Caches.clearAll, like the TF-IDF
+  // intermediates in TextQueries.
   private def nearDupPairs(s: SparkSession, d: String): DataFrame =
-    pairsCache.getOrElseUpdate((s, d),
+    Caches.memo("neardup_pairs", s, d)(
       Dedup.nearDuplicatePairs(Tables.documents(s, d), "doc_id", "text",
-        threshold = 0.5, numHashes = 128, bands = 64, rowsPerBand = 2).cache())
+        threshold = 0.5, numHashes = 128, bands = 64, rowsPerBand = 2).cache()
+    )(Snapshots.unpersist)
 
   // The component labels over those pairs feed q52 (the labels) and
   // q139 (canonical selection) — the min-label BSP is iterative, so
   // recomputing it per consumer costs whole rounds, not one plan node.
-  private val compCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def dedupComponents(s: SparkSession, d: String): DataFrame =
-    compCache.getOrElseUpdate((s, d),
+    Caches.memo("dedup_components", s, d)(
       Dedup.dedupGroups(nearDupPairs(s, d).select(col("id_a"), col("id_b")))
-        .cache())
-
-  /** Drop the memoized pair/component tables and unpersist their
-    * caches (see graft.util.Caches). */
-  private[graft] def clearMemo(): Unit = {
-    pairsCache.values.foreach(_.unpersist(blocking = false))
-    pairsCache.clear()
-    compCache.values.foreach(_.unpersist(blocking = false))
-    compCache.clear()
-  }
+        .cache()
+    )(Snapshots.unpersist)
 
   /** Internal-VOLUME meters for the scale probe (round-11, verdict
     * asks #3/#7): candidate-stage volumes for queries whose OUTPUT is
@@ -2710,8 +2699,8 @@ object PipelineOps {
     // SQL twin of the lineage-truncation note in connectedComponentsStars.
     // the center filter must live INSIDE the join input: as a join-on
     // conjunct the planner may hash-join the full codes table on i
-    // first (n·d × n/d rows) and post-filter — measured as a /tmp-
-    // filling spill at sf0.1
+    // first (n·d × n/d rows) and post-filter — measured as a
+    // disk-filling spill at sf0.1
     def distCte(name: String, centerSel: String): String =
       s"""$name AS MATERIALIZED (
          |  SELECT p.vec_id, CAST(sum((p.code - q.code)*(p.code - q.code)) AS BIGINT) AS d2

@@ -44,6 +44,17 @@ class HarnessSpec extends AnyFunSuite {
     assert(errors.asScala == Map("thrower" -> "no \"table\"\n"))
   }
 
+  test("timedOne leaves none of q335's temp views behind") {
+    def views(): Set[String] =
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = views()
+    val errors = new Harness.Errors()
+    Harness.timedOne(spark, TestSession.sf, errors)("q335_grec_stream_read",
+      SparkEntry.queries("q335_grec_stream_read"))
+    assert(errors.isEmpty, errors)
+    assert(views() -- before == Set.empty)
+  }
+
   // One timed region over a subset, as `graft.Run bench` runs it: a
   // batch query and a streaming query (both spied for the session they
   // get) and a query that throws.

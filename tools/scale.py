@@ -118,14 +118,16 @@ queries = sys.argv[2] if len(sys.argv) > 2 else QUERIES
 
 # The sf1 replica + its shuffle spill peak at tens of GB; stale copies
 # from a previous (or killed) run have exhausted /tmp before — a probe
-# died ENOSPC mid-build. Clear our own replica dirs and any orphaned
-# Spark block-manager spill (no JVM alive to own it) before starting.
+# died ENOSPC mid-build. Clear our own replica dirs and, when no JVM is
+# alive to own them, orphaned Spark block-manager spill and the engine's
+# `graft_*` artifact dirs (a killed run never reaches Caches.clearAll).
 import shutil, glob as _glob
 no_jvm = subprocess.run(["pgrep", "java"], capture_output=True).returncode != 0
 for p in ["/tmp/scale_sf001", "/tmp/scale_sf1"]:
     shutil.rmtree(p, ignore_errors=True)
 if no_jvm:
-    for p in _glob.glob("/tmp/blockmgr-*") + _glob.glob("/tmp/spark-*"):
+    for p in (_glob.glob("/tmp/blockmgr-*") + _glob.glob("/tmp/spark-*")
+              + _glob.glob("/tmp/graft_*/")):
         shutil.rmtree(p, ignore_errors=True)
 
 import os
